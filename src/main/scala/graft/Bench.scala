@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR. A warmup pass at sf0.001 first runs every query so
@@ -9,28 +9,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions) // run under the library's own rules
-      // Default = cpus (the gate table); SPARK_GRAFT_SHUFFLE_PARTITIONS
-      // overrides for scale-attribution legs — "does a superlinear octave
-      // row linearize when partitions scale with the corpus, the way a
-      // real cluster would scale them?" (the ScaleSmokeMain experiment,
-      // available on the bench surface since r11).
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Split multi-file tables file-per-task instead of packing them
-      // back into one split: the gate corpora are small enough that the
-      // default 128 MB packing collapses a 32-file table into ONE scan
-      // task, serializing every scan-bound per-row kernel (m04 measured
-      // 19x instead of ~4x at sf1.0). The production analog is simply
-      // "size maxPartitionBytes to the cluster", per SURVEY §5.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
+    val cpus = GraftSession.envCpus()
+    // Shuffle partitions default to cpus (the gate table);
+    // SPARK_GRAFT_SHUFFLE_PARTITIONS overrides for scale-attribution legs
+    // — "does a superlinear octave row linearize when partitions scale
+    // with the corpus, the way a real cluster would scale them?" (the
+    // ScaleSmokeMain experiment, available on the bench surface since r11).
+    val spark = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .foldLeft(GraftSession.builder(cpus))(_.config("spark.sql.shuffle.partitions", _))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Deterministic name-sorted order for BOTH the warm-up and the timed
@@ -46,7 +32,7 @@ object Bench {
       .filter { case (n, _) => filter.forall(_.findFirstIn(n).isDefined) }
     val warmDir = "/root/testdata/sf0.001"
     ordered.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      try fn(spark, warmDir).count() catch { case NonFatal(_) => () }
     }
     // Three timed reps, report min: same query, same plan — min is the
     // machine-noise-robust steady-state capability (the first rep also
@@ -128,16 +114,13 @@ object Bench {
     // structure, which is already the standing rule.
     val n = ordered.size
     val interleaveAt: Set[Int] = Set(n / 4, n / 2, 3 * n / 4).filter(i => i > 0 && i < n)
-    // Rows that tripped the >2× rep-spread guard, with ALL their raw rep
-    // times (the flagged-row evidence verdict r14 item 3 asked for).
-    val noisyReps = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
     val results = ordered.zipWithIndex.map { case ((name, fn), idx) =>
       if (interleaveAt(idx)) probeSample()
       pred.foreach { pf =>
         // A pred failure must be LOUD: if the pinned predecessor throws at
         // the target SF the leg silently degrades to unpinned, which is
         // exactly the uncontrolled comparison PRED exists to prevent.
-        try pf(spark, sfDir).count() catch { case e: Throwable =>
+        try pf(spark, sfDir).count() catch { case NonFatal(e) =>
           predFailed += name
           System.err.println(s"[bench] pred failed before $name: " +
             s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}")
@@ -152,28 +135,13 @@ object Bench {
       def timedRep(): Option[Double] = {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getClass.getName}: " +
             s"${String.valueOf(e.getMessage).take(300)}")
           None
         }
       }
-      val base = (1 to reps).flatMap(_ => timedRep())
-      // Per-query noise rejection (r15, verdict item 3): min-of-3 cannot
-      // reject this box's single-row 4–12× spikes (r14 c32 leg: d03
-      // 2.597 s vs 0.207 same-code c8; d01/d04/d08 same pattern). A row
-      // whose rep spread exceeds 2× gets two EXTRA reps and reports the
-      // min of all — the min is still the same statistic, computed on a
-      // sample robust to one or two co-scheduled-box blowouts. Flagged
-      // rows land in the JSON ("noisy_reps") with every raw rep time so
-      // downstream tables can see exactly what was rejected. Only the
-      // default multi-rep protocol opts in (REPS=1 big-SF sweeps keep
-      // their one-pass semantics).
-      val times =
-        if (base.size >= 2 && reps >= 3 && base.max / base.min > 2.0)
-          base ++ (1 to 2).flatMap(_ => timedRep())
-        else base
-      if (times.size > base.size) noisyReps(name) = times
+      val times = (1 to reps).flatMap(_ => timedRep())
       name -> (if (times.nonEmpty) times.min else -1.0)
     }
     // 3-decimal floats: the consumer captures only the TAIL of this
@@ -196,11 +164,6 @@ object Bench {
     val probeSamplesJson =
       s""","probe_samples":{"scan":${probeScanSamples.map(f3).mkString("[", ",", "]")},""" +
       s""""shuffle":${probeShufSamples.map(f3).mkString("[", ",", "]")}}"""
-    val noisyJson =
-      if (noisyReps.isEmpty) ""
-      else noisyReps.map { case (k, ts) =>
-        s"\"" + k + "\":" + ts.map(f3).mkString("[", ",", "]")
-      }.mkString(",\"noisy_reps\":{", ",", "}")
     val probes = s""""probe_pre":${probeJson(probePre)},"probe_post":${probeJson(probePost)}""" +
       probeBand +
       (if (predFailed.isEmpty) ""
@@ -211,7 +174,7 @@ object Bench {
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // Full line carries every raw probe sample; the compact tail line
     // below carries only the [min, median, max] band (tail-buffer budget).
-    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,$probes$probeSamplesJson$noisyJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,$probes$probeSamplesJson,"sf":"$sfDir"}"""
     println(line)
     // The stdout consumer captures only the last ~2000 chars of this
     // process's output, which truncates the ~220-entry map's HEAD — so
@@ -242,7 +205,7 @@ object Bench {
       .scanLeft(("", 0)) { case ((_, len), e) => (e, len + e.length + 1) }
       .drop(1).takeWhile(_._2 <= 1200).map(_._1).toSeq
     val compact = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${
-      slowest.mkString("{", ",", "}")},"n_queries":${results.size},"n_noisy":${noisyReps.size},$probes,"sf":"$sfDir"}"""
+      slowest.mkString("{", ",", "}")},"n_queries":${results.size},$probes,"sf":"$sfDir"}"""
     println(compact)
     spark.stop()
   }

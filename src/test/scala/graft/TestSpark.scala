@@ -6,16 +6,7 @@ import org.apache.spark.sql.SparkSession
   * every spec runs under the injected functions + optimizer rule (which
   * must be semantics-preserving; ExtensionsSpec asserts they fire). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).appName("graft-test").getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
 }
